@@ -19,17 +19,23 @@ Iceberg runtime jars, so this is the documented fallback per SURVEY.md
       stats.json                written LAST (completion marker):
                                 N, avgdl, n_buckets, k1, b
 
-**One corpus pass.** Doc metadata and encoded postings are emitted by a
-single mapInArrow kernel per bucket: tokenize once (pyarrow C++
-utf8_lower + utf8_split_whitespace), yield the doc rows, then
-dictionary-encode + sort + run-length + varint-encode the postings from
-the same token arrays. This is possible because the codec's block
-metadata stores the avgdl-independent bound pair ``(max_tf, min_dl)``
-(codec.py): nothing in a segment depends on corpus-global statistics, so
-no pre-pass over the corpus is needed and the dominant kernel cost
-(tokenization) is paid exactly once. Global stats (N, avgdl, idf) are
-derived afterwards from the *already-written* doc rows — a metadata-only
-aggregation, no text involved.
+**One bucket writer.** Both builds — :func:`build_segments` (text ->
+segments) and :func:`build_segments_from_postings` (decoded postings ->
+segments, the compaction path) — run the same bucket build: layout
+check, lineage-gated resume, one mapInArrow kernel per bucket, commit,
+finalize. They differ only in how a bucket's rows become sorted
+postings. The text build tokenizes once (pyarrow C++ utf8_lower +
+utf8_split_whitespace) and sorts + run-lengths the token arrays; the
+postings build dictionary-encodes the urls and argsorts the rows, and
+carries zero-token pages through as null-term rows so a compacted index
+keeps them. The shared kernel then yields the doc rows and
+varint-encodes the postings. One pass over the corpus is enough
+because the codec's block metadata stores the avgdl-independent bound
+pair ``(max_tf, min_dl)`` (codec.py): nothing in a segment depends on
+corpus-global statistics, so no pre-pass is needed and the dominant
+kernel cost (tokenization) is paid exactly once. Global stats (N,
+avgdl, idf) are derived afterwards from the *already-written* doc rows
+— a metadata-only aggregation, no text involved.
 
 Partitioning choice: **documents** are hash-partitioned into buckets and
 each bucket holds a full mini-index over its docs (local dense doc_idx).
@@ -53,7 +59,8 @@ different bucket count (e.g. a changed file listing or
 instead of silently renumbering buckets against the old lineage.
 ``stats.json`` is written only after every bucket has committed and
 termstats is durable, so its presence IS the completion marker
-(streaming/ingest.py gates generations on it).
+(streaming/ingest.py gates generations on it) and resuming a complete
+index is a no-op that reads only ``layout.json`` and ``stats.json``.
 """
 
 from __future__ import annotations
@@ -86,11 +93,12 @@ CODEC_VERSION = 2
 # Unified index-row schema: kind=0 doc rows, kind=1 term rows. One
 # parquet table carries both — the build emits them from ONE kernel and
 # readers prune by ``kind`` (columnar reads never touch the other kind's
-# columns; predicate pushdown skips its row groups).
+# columns; predicate pushdown skips its row groups). Every column is
+# nullable, as in every segment file written so far.
 INDEX_SCHEMA = StructType(
     [
-        StructField("bucket", IntegerType(), False),
-        StructField("kind", IntegerType(), False),
+        StructField("bucket", IntegerType(), True),
+        StructField("kind", IntegerType(), True),
         StructField("doc_idx", LongType(), True),
         StructField("url", StringType(), True),
         StructField("dl", LongType(), True),
@@ -164,10 +172,6 @@ def build_segments(
 
     Returns a summary dict (buckets built, docs, elapsed).
     """
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    t0 = time.monotonic()
-
     # Bucket layout — two modes:
     #   n_buckets > 0: url-hash bucketing (repartition + url sort) —
     #     deterministic under ANY input layout; used by tests/small runs.
@@ -187,76 +191,130 @@ def build_segments(
     else:
         mode = "map-side"
         n_buckets = part.rdd.getNumPartitions()
+    return _build(
+        spark, part, _text_postings, out_dir, n_buckets, mode, run_id,
+        k1, b, pfor, fail_after_buckets,
+    )
 
-    # Resume-safety: the bucket layout must match the recorded one, or a
-    # resumed run would renumber buckets against the old lineage and
-    # silently build a corrupted mixed index. Fail fast instead.
-    layout_path = out / "layout.json"
-    layout = {
+
+def build_segments_from_postings(
+    spark: SparkSession,
+    postings: DataFrame,
+    out_dir: str,
+    n_buckets: int = 16,
+    run_id: str = "compact-0",
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+    pfor: bool = False,
+) -> dict:
+    """Build a segment index from an already-tokenized postings relation
+    ``(url, term, tf, dl)`` — one row per (url, term), ``dl`` repeated
+    per row, and one row with a null ``term`` for a zero-token doc. No
+    text pass: this is the generation-compaction path
+    (streaming/ingest.py) where the inputs are decoded from existing
+    segments, and it doubles as a general "index from relation" ctor
+    (SURVEY.md §2 B2). Produces the same unified layout as
+    :func:`build_segments` through the same bucket writer; global stats
+    (N, avgdl, idf) are computed over the union, which is exactly what
+    compaction exists to restore. ``pfor`` selects the same per-block
+    codec choice as :func:`build_segments` — compaction passes the
+    source index's recorded choice through so a PFor index stays PFor
+    after merge.
+
+    ``url`` must be unique per document across the input (each (url,
+    term) row carries the doc's full tf — true for the union of
+    doc-disjoint generations).
+    """
+    part = postings.select("url", "term", "tf", "dl").repartition(
+        n_buckets, "url"
+    ).sortWithinPartitions("url", "term")
+    return _build(
+        spark, part, _relation_postings, out_dir, n_buckets,
+        "url-hash-postings", run_id, k1, b, pfor,
+    )
+
+
+def _build(
+    spark, part, postings_of, out_dir, n_buckets, mode, run_id, k1, b, pfor,
+    fail_after_buckets=None,
+) -> dict:
+    """The one bucket build behind both public builders: layout check,
+    lineage-gated resume of the missing buckets, then the finalize.
+
+    ``part`` holds one partition per bucket and ``postings_of`` turns a
+    bucket's rows into its sorted postings (see :func:`_build_buckets`).
+    A complete index (``stats.json`` present — it is written last)
+    returns its recorded stats without touching Spark or the files.
+    """
+    t0 = time.monotonic()
+    out = Path(out_dir)
+    out.mkdir(parents=True, exist_ok=True)
+    _check_layout(out, {
         "n_buckets": n_buckets,
         "mode": mode,
         "k1": k1,
         "b": b,
         "codec": CODEC_VERSION,
         "pfor": pfor,
-    }
-    if layout_path.exists():
-        prev = json.loads(layout_path.read_text())
-        prev.setdefault("pfor", False)  # records from before the option
-        if prev != layout:
-            raise ValueError(
-                f"index layout mismatch under {out_dir}: recorded {prev}, "
-                f"recomputed {layout} — refusing to resume (a map-side "
-                "build must see the identical input partitioning; delete "
-                "the directory to rebuild from scratch)"
-            )
-    else:
-        layout_path.write_text(json.dumps(layout))
-
-    committed = _committed_buckets(spark, out)
-    _clean_uncommitted(out, committed)
-
-    missing = sorted(set(range(n_buckets)) - committed)
-    todo = missing
-    if fail_after_buckets is not None:
-        todo = todo[:fail_after_buckets]
-    if todo:
-        with _phase("build_buckets"):
-            _build_buckets(spark, part, out, todo, run_id, pfor)
-
-    complete = len(_committed_buckets(spark, out)) == n_buckets
-    n_docs = avgdl = None
-    if complete:
-        # Corpus stats + global term stats from the committed index —
-        # metadata-only aggregations (no corpus/text pass).
-        with _phase("stats"):
-            agg = (
-                spark.read.parquet(str(out / "index"))
-                .filter(F.col("kind") == 0)
-                .agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
-                .collect()[0]
-            )
-        n_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 0.0)
-        with _phase("termstats"):
-            _write_termstats(spark, out, n_docs)
-        stats = {
-            "n_docs": n_docs,
-            "avgdl": avgdl,
-            "n_buckets": n_buckets,
-            "k1": k1,
-            "b": b,
-        }
-        (out / "stats.json").write_text(json.dumps(stats))
-
+    })
+    stats_path = out / "stats.json"
+    todo = []
+    if not stats_path.exists():
+        committed = _committed_buckets(spark, out)
+        _clean_uncommitted(out, committed)
+        todo = sorted(set(range(n_buckets)) - committed)[:fail_after_buckets]
+        if todo:
+            with _phase("build_buckets"):
+                _build_buckets(spark, part, postings_of, out, todo, run_id, pfor)
+        if len(_committed_buckets(spark, out)) == n_buckets:
+            # Corpus stats + global term stats from the committed index —
+            # metadata-only aggregations (no corpus/text pass).
+            with _phase("stats"):
+                agg = (
+                    read_docmeta(spark, str(out))
+                    .agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
+                    .collect()[0]
+                )
+            n_docs = int(agg["n"])
+            with _phase("termstats"):
+                _write_termstats(spark, out, n_docs)
+            stats_path.write_text(json.dumps({
+                "n_docs": n_docs,
+                "avgdl": float(agg["avgdl"] or 0.0),
+                "n_buckets": n_buckets,
+                "k1": k1,
+                "b": b,
+            }))
+    stats = json.loads(stats_path.read_text()) if stats_path.exists() else {}
+    n_docs = stats.get("n_docs")
     elapsed = time.monotonic() - t0
     return {
         "built_buckets": len(todo),
         "n_docs": n_docs,
-        "avgdl": avgdl,
-        "complete": complete,
+        "avgdl": stats.get("avgdl"),
+        "complete": bool(stats),
         "elapsed_secs": elapsed,
-        "docs_per_sec": (n_docs / elapsed) if (n_docs and elapsed > 0) else None,
+        "docs_per_sec": (n_docs / elapsed) if (n_docs and todo) else None,
     }
+
+
+def _check_layout(out: Path, layout: dict) -> None:
+    """Resume-safety: the bucket layout must match the recorded one, or a
+    resumed run would renumber buckets against the old lineage and
+    silently build a corrupted mixed index. Fail fast instead."""
+    layout_path = out / "layout.json"
+    if not layout_path.exists():
+        layout_path.write_text(json.dumps(layout))
+        return
+    prev = json.loads(layout_path.read_text())
+    prev.setdefault("pfor", False)  # records from before the option
+    if prev != layout:
+        raise ValueError(
+            f"index layout mismatch under {out}: recorded {prev}, "
+            f"recomputed {layout} — refusing to resume (a map-side "
+            "build must see the identical input partitioning; delete "
+            "the directory to rebuild from scratch)"
+        )
 
 
 def _committed_buckets(spark: SparkSession, out: Path) -> set[int]:
@@ -283,6 +341,13 @@ def _clean_uncommitted(out: Path, committed: set[int]) -> None:
 _MID_MASK = (1 << 33) - 1
 
 
+def _run_starts(a: np.ndarray) -> np.ndarray:
+    """Positions where a sorted array starts a new run of equal values."""
+    if len(a) == 0:
+        return np.zeros(0, dtype=np.int64)
+    return np.flatnonzero(np.concatenate(([True], a[1:] != a[:-1])))
+
+
 def _arrow_tokens(text_array):
     """Arrow-side reference tokenizer: lower + Unicode-whitespace split.
 
@@ -305,112 +370,125 @@ def _arrow_tokens(text_array):
     return flat, doc_of, dl
 
 
-def _build_buckets(spark, part, out: Path, todo, run_id, pfor=False) -> None:
-    """The single corpus pass — ZERO-SHUFFLE fused map-side indexing.
+def _text_postings(tbl):
+    """``(url, text)`` rows -> ``(urls, dl, terms, p_codes, p_docs, p_tfs)``.
+
+    Tokenize once, dictionary-encode the tokens, sort one packed int64
+    key ``(term code << 33) | doc position`` in place and run-length it
+    into (term, doc, tf) postings. (A stable argsort of the same key
+    costs several times the in-place sort at every measured size.)
+    """
+    import pyarrow.compute as pc
+
+    flat, doc_of, dl = _arrow_tokens(tbl.column("text").combine_chunks())
+    de = pc.dictionary_encode(flat)
+    codes = de.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    key = (codes << 33) | doc_of
+    key.sort()
+    run_starts = _run_starts(key)
+    p_tfs = np.diff(np.append(run_starts, len(key)))
+    key = key[run_starts]
+    return (
+        tbl.column("url").combine_chunks(), dl, de.dictionary,
+        key >> 33, key & _MID_MASK, p_tfs,
+    )
+
+
+def _relation_postings(tbl):
+    """``(url, term, tf, dl)`` rows sorted by url -> the same tuple as
+    :func:`_text_postings`: doc_idx is the url's rank, and a null-term
+    row (a zero-token doc) yields its doc row only."""
+    import pyarrow.compute as pc
+
+    u_enc = pc.dictionary_encode(tbl.column("url").combine_chunks())
+    doc_of = u_enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    dl = np.zeros(len(u_enc.dictionary), dtype=np.int64)
+    dl[doc_of] = tbl.column("dl").to_numpy().astype(np.int64)
+    tf = tbl.column("tf").to_numpy().astype(np.int64)
+    terms = tbl.column("term").combine_chunks()
+    if terms.null_count:
+        has_term = pc.is_valid(terms)
+        terms = terms.filter(has_term)
+        keep = has_term.to_numpy(zero_copy_only=False)
+        doc_of, tf = doc_of[keep], tf[keep]
+    t_enc = pc.dictionary_encode(terms)
+    codes = t_enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    order = np.argsort((codes << 33) | doc_of, kind="stable")
+    return (
+        u_enc.dictionary, dl, t_enc.dictionary,
+        codes[order], doc_of[order], tf[order],
+    )
+
+
+def _build_buckets(
+    spark, part, postings_of, out: Path, todo, run_id, pfor=False
+) -> None:
+    """The single pass over the input — ZERO-SHUFFLE fused map-side
+    indexing.
 
     Each partition (= bucket) of ``part`` flows through ONE mapInArrow
-    kernel that does the whole per-bucket index build in Arrow/numpy:
-    tokenize (pyarrow C++ utf8_lower + utf8_split_whitespace — string
-    data never becomes Python objects), emit the doc rows (doc_idx, url,
-    dl), then dictionary-encode terms, sort+run-length into
-    (term, doc, tf) postings, and the batched varint/block-meta encode
-    with avgdl-independent (max_tf, min_dl) bounds. The corpus is
-    tokenized exactly once and never crosses an exchange; the only
-    shuffled relation in the whole build is vocabulary-sized (termstats).
-    This mirrors how doc-sharded web indexes scale: posting construction
-    is embarrassingly parallel per shard.
+    kernel that does the whole per-bucket index build in Arrow/numpy.
+    ``postings_of`` turns the bucket's rows into ``(urls, dl, term
+    dictionary, p_codes, p_docs, p_tfs)`` — postings sorted by (term
+    code, doc) — and the kernel emits the doc rows (doc_idx, url, dl),
+    runs the batched varint/block-meta encode with avgdl-independent
+    (max_tf, min_dl) bounds and emits the term rows. On the text path
+    the corpus is tokenized exactly once (pyarrow C++ utf8_lower +
+    utf8_split_whitespace — string data never becomes Python objects)
+    and never crosses an exchange; the only shuffled relation in the
+    whole build is vocabulary-sized (termstats). This mirrors how
+    doc-sharded web indexes scale: posting construction is
+    embarrassingly parallel per shard.
     """
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
+    arrow_schema = to_arrow_schema(INDEX_SCHEMA)
     todo_set = set(todo)
     part_f = part.filter(F.spark_partition_id().isin(list(todo_set)))
 
-    arrow_schema = pa.schema(
-        [
-            ("bucket", pa.int32()),
-            ("kind", pa.int32()),
-            ("doc_idx", pa.int64()),
-            ("url", pa.string()),
-            ("dl", pa.int64()),
-            ("term_hash", pa.int64()),
-            ("term", pa.string()),
-            ("df", pa.int64()),
-            ("postings", pa.binary()),
-            ("blockmeta", pa.binary()),
-            ("enc_bytes", pa.int64()),
-            ("encode_secs", pa.float64()),
-        ]
-    )
+    def batch(n, bucket, kind, **cols):
+        cols["bucket"] = pa.array(np.full(n, bucket, dtype=np.int32))
+        cols["kind"] = pa.array(np.full(n, kind, dtype=np.int32))
+        return pa.RecordBatch.from_arrays(
+            [
+                cols[f.name] if f.name in cols else pa.nulls(n, type=f.type)
+                for f in arrow_schema
+            ],
+            schema=arrow_schema,
+        )
 
     def encode_partition(batches):
         import hashlib
 
-        import pyarrow.compute as pc
         from pyspark import TaskContext
 
         t_start = time.monotonic()
-        url_chunks, text_chunks = [], []
-        for rb in batches:
-            url_chunks.append(rb.column(0))
-            text_chunks.append(rb.column(1))
-        if not text_chunks:
+        batches = [rb for rb in batches if rb.num_rows]
+        if not batches:
             return
         bucket = TaskContext.get().partitionId()
-        urls = pa.chunked_array(url_chunks).combine_chunks()
-        text = pa.chunked_array(text_chunks).combine_chunks()
-        flat, doc_of, dl = _arrow_tokens(text)
+        urls, dl, terms, p_codes, p_docs, p_tfs = postings_of(
+            pa.Table.from_batches(batches)
+        )
         n_docs = len(urls)
-
-        def nulls(t):
-            return pa.nulls(n_docs, type=t)
-
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.full(n_docs, bucket, dtype=np.int32)),
-                pa.array(np.zeros(n_docs, dtype=np.int32)),
-                pa.array(np.arange(n_docs, dtype=np.int64)),
-                urls,
-                pa.array(dl),
-                nulls(pa.int64()),
-                nulls(pa.string()),
-                nulls(pa.int64()),
-                nulls(pa.binary()),
-                nulls(pa.binary()),
-                nulls(pa.int64()),
-                nulls(pa.float64()),
-            ],
-            schema=arrow_schema,
+        yield batch(
+            n_docs, bucket, 0,
+            doc_idx=pa.array(np.arange(n_docs, dtype=np.int64)),
+            url=urls,
+            dl=pa.array(dl),
         )
-        if len(flat) == 0:
+        if len(p_codes) == 0:
             return
-
-        de = pc.dictionary_encode(flat)
-        codes = de.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        # One int64 sort key: (term code << 33) | doc position.
-        key = (codes << 33) | doc_of
-        key.sort()
-        codes_s = key >> 33
-        docs_s = key & _MID_MASK
-        new_run = np.concatenate(([True], key[1:] != key[:-1]))
-        run_starts = np.flatnonzero(new_run)
-        run_ends = np.concatenate((run_starts[1:], [len(key)]))
-        p_codes = codes_s[run_starts]
-        p_docs = docs_s[run_starts]
-        p_tfs = (run_ends - run_starts).astype(np.int64)
-        t_change = np.flatnonzero(
-            np.concatenate(([True], p_codes[1:] != p_codes[:-1]))
-        )
-        bounds = np.concatenate((t_change, [len(p_codes)]))
-        starts, ends = bounds[:-1], bounds[1:]
+        starts = _run_starts(p_codes)
+        ends = np.append(starts[1:], len(p_codes))
         encoded = encode_postings_batch(
             p_docs, p_tfs, dl[p_docs], starts, ends, pfor=pfor
         )
         # Term strings via Arrow take (no Python string materialization);
         # hash60 per DISTINCT term only (vocabulary-sized) — identical to
         # int(md5[:15], 16) everywhere else in the engine.
-        seg_terms = de.dictionary.take(
-            pa.array(p_codes[starts], type=pa.int32())
-        )
+        seg_terms = terms.take(pa.array(p_codes[starts], type=pa.int32()))
         hashes = np.array(
             [
                 int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16)
@@ -418,47 +496,27 @@ def _build_buckets(spark, part, out: Path, todo, run_id, pfor=False) -> None:
             ],
             dtype=np.int64,
         )
-        n_terms = len(starts)
-        secs = np.full(n_terms, np.nan)
-        if n_terms:
-            secs[0] = time.monotonic() - t_start
-
-        def tnulls(t):
-            return pa.nulls(n_terms, type=t)
-
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.full(n_terms, bucket, dtype=np.int32)),
-                pa.array(np.ones(n_terms, dtype=np.int32)),
-                tnulls(pa.int64()),
-                tnulls(pa.string()),
-                tnulls(pa.int64()),
-                pa.array(hashes),
-                seg_terms,
-                pa.array((ends - starts).astype(np.int64)),
-                pa.array([e.postings for e in encoded], type=pa.binary()),
-                pa.array([e.blockmeta for e in encoded], type=pa.binary()),
-                # per-term encoded size: lets the commit metrics sum a
-                # cheap int column instead of scanning the binary bytes
-                pa.array(
-                    np.array(
-                        [len(e.postings) + len(e.blockmeta) for e in encoded],
-                        dtype=np.int64,
-                    )
-                ),
-                pa.array(secs, from_pandas=True),  # NaN -> null
-            ],
-            schema=arrow_schema,
+        secs = np.full(len(starts), np.nan)
+        secs[0] = time.monotonic() - t_start
+        yield batch(
+            len(starts), bucket, 1,
+            term_hash=pa.array(hashes),
+            term=seg_terms,
+            df=pa.array(ends - starts),
+            postings=pa.array([e.postings for e in encoded], type=pa.binary()),
+            blockmeta=pa.array([e.blockmeta for e in encoded], type=pa.binary()),
+            # per-term encoded size: lets the commit metrics sum a
+            # cheap int column instead of scanning the binary bytes
+            enc_bytes=pa.array(
+                np.array(
+                    [len(e.postings) + len(e.blockmeta) for e in encoded],
+                    dtype=np.int64,
+                )
+            ),
+            encode_secs=pa.array(secs, from_pandas=True),  # NaN -> null
         )
 
-    rows = part_f.mapInArrow(
-        encode_partition,
-        schema=(
-            "bucket int, kind int, doc_idx long, url string, dl long, "
-            "term_hash long, term string, df long, postings binary, "
-            "blockmeta binary, enc_bytes long, encode_secs double"
-        ),
-    )
+    rows = part_f.mapInArrow(encode_partition, schema=INDEX_SCHEMA)
     with _phase("encode+write"):
         rows.write.partitionBy("bucket").mode("append").parquet(
             str(out / "index")
@@ -521,209 +579,6 @@ def _commit_buckets(spark, out: Path, todo_set: set, run_id: str) -> None:
     ).coalesce(1).write.mode("append").parquet(str(out / "metrics.parquet"))
 
 
-def build_segments_from_postings(
-    spark: SparkSession,
-    postings: DataFrame,
-    out_dir: str,
-    n_buckets: int = 16,
-    run_id: str = "compact-0",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    pfor: bool = False,
-) -> dict:
-    """Build a segment index from an already-tokenized postings relation
-    ``(url, term, tf, dl)`` — one row per (url, term), ``dl`` repeated
-    per row. No text pass: this is the generation-compaction path
-    (streaming/ingest.py) where the inputs are decoded from existing
-    segments, and it doubles as a general "index from relation" ctor
-    (SURVEY.md §2 B2). Produces the same unified layout as
-    :func:`build_segments`; global stats (N, avgdl, idf) are computed
-    over the union, which is exactly what compaction exists to restore.
-    ``pfor`` selects the same per-block codec choice as
-    :func:`build_segments` — compaction passes the source index's
-    recorded choice through so a PFor index stays PFor after merge.
-
-    ``url`` must be unique per document across the input (each (url,
-    term) row carries the doc's full tf — true for the union of
-    doc-disjoint generations).
-    """
-    import pyarrow as pa
-
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    t0 = time.monotonic()
-
-    part = postings.select("url", "term", "tf", "dl").repartition(
-        n_buckets, "url"
-    ).sortWithinPartitions("url", "term")
-
-    layout_path = out / "layout.json"
-    layout = {
-        "n_buckets": n_buckets,
-        "mode": "url-hash-postings",
-        "k1": k1,
-        "b": b,
-        "codec": CODEC_VERSION,
-        "pfor": pfor,
-    }
-    if layout_path.exists():
-        prev = json.loads(layout_path.read_text())
-        prev.setdefault("pfor", False)  # records from before the option
-        if prev != layout:
-            raise ValueError(
-                f"index layout mismatch under {out_dir}: {prev} != {layout}"
-            )
-    else:
-        layout_path.write_text(json.dumps(layout))
-
-    arrow_schema_str = (
-        "bucket int, kind int, doc_idx long, url string, dl long, "
-        "term_hash long, term string, df long, postings binary, "
-        "blockmeta binary, enc_bytes long, encode_secs double"
-    )
-
-    def encode_partition(batches):
-        import hashlib
-
-        import pyarrow.compute as pc
-        from pyspark import TaskContext
-
-        t_start = time.monotonic()
-        tbl_chunks = [pa.Table.from_batches([rb]) for rb in batches]
-        if not tbl_chunks:
-            return
-        bucket = TaskContext.get().partitionId()
-        tbl = pa.concat_tables(tbl_chunks).combine_chunks()
-        if len(tbl) == 0:
-            return
-        urls = tbl.column("url").combine_chunks()
-        terms = tbl.column("term").combine_chunks()
-        tf = tbl.column("tf").to_numpy(zero_copy_only=False).astype(np.int64)
-        dlr = tbl.column("dl").to_numpy(zero_copy_only=False).astype(np.int64)
-        # Rows arrive sorted by (url, term): doc_idx = rank of url.
-        u_enc = pc.dictionary_encode(urls)
-        doc_of = u_enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        uniq_urls = u_enc.dictionary  # first-occurrence order == url order
-        n_docs = len(uniq_urls)
-        dl_per_doc = np.zeros(n_docs, dtype=np.int64)
-        dl_per_doc[doc_of] = dlr
-
-        arrow_schema = pa.schema(
-            [
-                ("bucket", pa.int32()), ("kind", pa.int32()),
-                ("doc_idx", pa.int64()), ("url", pa.string()),
-                ("dl", pa.int64()), ("term_hash", pa.int64()),
-                ("term", pa.string()), ("df", pa.int64()),
-                ("postings", pa.binary()), ("blockmeta", pa.binary()),
-                ("enc_bytes", pa.int64()), ("encode_secs", pa.float64()),
-            ]
-        )
-
-        def nulls(n, t):
-            return pa.nulls(n, type=t)
-
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.full(n_docs, bucket, dtype=np.int32)),
-                pa.array(np.zeros(n_docs, dtype=np.int32)),
-                pa.array(np.arange(n_docs, dtype=np.int64)),
-                uniq_urls,
-                pa.array(dl_per_doc),
-                nulls(n_docs, pa.int64()), nulls(n_docs, pa.string()),
-                nulls(n_docs, pa.int64()), nulls(n_docs, pa.binary()),
-                nulls(n_docs, pa.binary()), nulls(n_docs, pa.int64()),
-                nulls(n_docs, pa.float64()),
-            ],
-            schema=arrow_schema,
-        )
-
-        t_enc = pc.dictionary_encode(terms)
-        codes = t_enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        key = (codes << 33) | doc_of
-        order = np.argsort(key, kind="stable")
-        p_codes = codes[order]
-        p_docs = doc_of[order]
-        p_tfs = tf[order]
-        t_change = np.flatnonzero(
-            np.concatenate(([True], p_codes[1:] != p_codes[:-1]))
-        )
-        bounds = np.concatenate((t_change, [len(p_codes)]))
-        starts, ends = bounds[:-1], bounds[1:]
-        encoded = encode_postings_batch(
-            p_docs, p_tfs, dl_per_doc[p_docs], starts, ends, pfor=pfor
-        )
-        seg_terms = t_enc.dictionary.take(
-            pa.array(p_codes[starts], type=pa.int32())
-        )
-        hashes = np.array(
-            [
-                int(hashlib.md5(t.encode("utf-8")).hexdigest()[:15], 16)
-                for t in seg_terms.to_pylist()
-            ],
-            dtype=np.int64,
-        )
-        n_terms = len(starts)
-        secs = np.full(n_terms, np.nan)
-        if n_terms:
-            secs[0] = time.monotonic() - t_start
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array(np.full(n_terms, bucket, dtype=np.int32)),
-                pa.array(np.ones(n_terms, dtype=np.int32)),
-                nulls(n_terms, pa.int64()), nulls(n_terms, pa.string()),
-                nulls(n_terms, pa.int64()),
-                pa.array(hashes),
-                seg_terms,
-                pa.array((ends - starts).astype(np.int64)),
-                pa.array([e.postings for e in encoded], type=pa.binary()),
-                pa.array([e.blockmeta for e in encoded], type=pa.binary()),
-                pa.array(
-                    np.array(
-                        [len(e.postings) + len(e.blockmeta) for e in encoded],
-                        dtype=np.int64,
-                    )
-                ),
-                pa.array(secs, from_pandas=True),
-            ],
-            schema=arrow_schema,
-        )
-
-    committed = _committed_buckets(spark, out)
-    _clean_uncommitted(out, committed)
-    todo = sorted(set(range(n_buckets)) - committed)
-    if todo:
-        part_f = part.filter(F.spark_partition_id().isin(todo))
-        rows = part_f.mapInArrow(encode_partition, schema=arrow_schema_str)
-        rows.write.partitionBy("bucket").mode("append").parquet(
-            str(out / "index")
-        )
-        _commit_buckets(spark, out, set(todo), run_id)
-
-    n_docs = avgdl = None
-    if len(_committed_buckets(spark, out)) == n_buckets:
-        agg = (
-            spark.read.parquet(str(out / "index"))
-            .filter(F.col("kind") == 0)
-            .agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
-            .collect()[0]
-        )
-        n_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 0.0)
-        _write_termstats(spark, out, n_docs)
-        (out / "stats.json").write_text(
-            json.dumps(
-                {"n_docs": n_docs, "avgdl": avgdl, "n_buckets": n_buckets,
-                 "k1": k1, "b": b}
-            )
-        )
-    elapsed = time.monotonic() - t0
-    return {
-        "built_buckets": len(todo),
-        "n_docs": n_docs,
-        "avgdl": avgdl,
-        "elapsed_secs": elapsed,
-    }
-
-
 def bm25_idf_col(df_col, n_docs: int):
     """``ln(1 + (N - df + 0.5) / (df + 0.5))`` — the build's BM25 idf.
 
@@ -762,12 +617,9 @@ def read_index(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(f"{out_dir}/index")
 
 
-def read_segments(
-    spark: SparkSession, out_dir: str, with_terms: bool = True
-) -> DataFrame:
+def read_segments(spark: SparkSession, out_dir: str) -> DataFrame:
     # term strings live in the segment rows themselves (parquet dictionary
-    # encoding makes the column vocabulary-sized on disk); with_terms is
-    # kept for API compatibility and simply no-ops.
+    # encoding makes the column vocabulary-sized on disk)
     return (
         read_index(spark, out_dir)
         .filter(F.col("kind") == 1)
@@ -776,11 +628,6 @@ def read_segments(
             "encode_secs",
         )
     )
-
-
-def read_lexicon(spark: SparkSession, out_dir: str) -> DataFrame:
-    """(term, term_hash) vocabulary — derived from segments."""
-    return read_segments(spark, out_dir).select("term", "term_hash").distinct()
 
 
 def read_docmeta(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -797,7 +644,9 @@ def read_postings_relation(spark: SparkSession, out_dir: str) -> DataFrame:
     The inverse of the build: one grouped scan per bucket decodes every
     posting list and resolves doc_idx -> (url, dl) against the bucket's
     doc rows — no text involved. This is what generation compaction
-    feeds into :func:`build_segments_from_postings`.
+    feeds into :func:`build_segments_from_postings`. A zero-token doc
+    sits in no posting list, so it comes out as one row with a null
+    ``term`` and ``tf = 0``: compaction keeps it in N and avgdl.
     """
     import pandas as pd
 
@@ -812,16 +661,15 @@ def read_postings_relation(spark: SparkSession, out_dir: str) -> DataFrame:
         docs = pdf[kinds == 0]
         terms = pdf[kinds == 1]
         n_docs = len(docs)
-        if n_docs == 0 or len(terms) == 0:
-            return pd.DataFrame(columns=["url", "term", "tf", "dl"]).astype(
-                {"tf": "int64", "dl": "int64"}
-            )
         urls = np.empty(n_docs, dtype=object)
         dls = np.zeros(n_docs, dtype=np.int64)
         di = docs["doc_idx"].to_numpy(dtype=np.int64)
         urls[di] = docs["url"].to_numpy()
         dls[di] = docs["dl"].to_numpy(dtype=np.int64)
-        url_parts, term_parts, tf_parts, dl_parts = [], [], [], []
+        empty = dls == 0
+        url_parts, dl_parts = [urls[empty]], [dls[empty]]
+        term_parts = [np.full(int(empty.sum()), None, dtype=object)]
+        tf_parts = [np.zeros(int(empty.sum()), dtype=np.int64)]
         for t, p, m in zip(terms["term"], terms["postings"], terms["blockmeta"]):
             ids, tfs = decode_postings(bytes(p), bytes(m))
             url_parts.append(urls[ids])

@@ -199,8 +199,3 @@ def build_term_index(
         "term_bucket",
         F.pmod(F.xxhash64(F.col("term")), F.lit(n_term_buckets)).cast("int"),
     ).select("term_bucket", "term", "df", "postings", "blockmeta")
-
-
-def write_term_index(df: DataFrame, out_dir: str) -> None:
-    """Persist partitioned by term_bucket for partition-pruned lookups."""
-    df.write.partitionBy("term_bucket").mode("overwrite").parquet(out_dir)

@@ -342,14 +342,6 @@ n AS (
     FROM embeddings
 )"""
 
-SQL_COSINE_NEARDUP_PAIRS = rf"""
-WITH {_SQL_VECTORS}
-SELECT a.vec_id AS vec_id_a, b.vec_id AS vec_id_b,
-       round({_sql_dot('a.v', 'b.v')} / (a.nrm * b.nrm) + 1e-9, 6) AS cosine
-FROM n a JOIN n b ON a.vec_id < b.vec_id
-WHERE round({_sql_dot('a.v', 'b.v')} / (a.nrm * b.nrm) + 1e-9, 6) >= {NEARDUP_MIN_COS}
-"""
-
 SQL_ANN_BRUTE_TOPK = rf"""
 WITH {_SQL_VECTORS},
 scored AS (
